@@ -30,7 +30,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 object GraftEngine {
 
   /** Release every DataFrame the operators persisted internally (dedup
-    * probes, LSH banding inputs, broker over-fetches). Call after
+    * probes, LSH banding inputs, staged-path stage outputs) and every
+    * memoized registry projection and distinct estimate. Call after
     * materializing results in a long-lived session; un-materialized results
     * stay correct and simply recompute from lineage.
     */
@@ -40,14 +41,18 @@ object GraftEngine {
   }
 
   /** deduplicate_chunks: the §3.1 pipeline (cluster → representative → MMR →
-    * compress) over (group, id, text, embedding, score) chunks.
+    * compress) over (group, id, text, embedding, score) chunks — one keyed
+    * shuffle through the selection core [[retrieveDeduplicated]] shares.
     */
   def deduplicateChunks(chunks: DataFrame, groupCol: String, idCol: String,
                         textCol: String, embCol: String, scoreCol: String,
                         cfg: PipelineOps.PipelineConfig = PipelineOps.PipelineConfig()): DataFrame =
     PipelineOps.dedupPipeline(chunks, groupCol, idCol, textCol, embCol, scoreCol, cfg)
 
-  /** retrieve_deduplicated: over-fetch KNN → cluster → select → MMR/top-K. */
+  /** retrieve_deduplicated: over-fetch KNN → cluster → select → MMR/top-K;
+    * everything after the KNN is the [[deduplicateChunks]] selection core
+    * keyed by query.
+    */
   def retrieveDeduplicated(corpus: DataFrame, queries: DataFrame,
                            idCol: String, embCol: String,
                            qidCol: String, qembCol: String,
@@ -57,7 +62,8 @@ object GraftEngine {
   /** deduplicate_chunks with the reference's per-stage report (every broker
     * response carries Stats — pipeline.go:16-32): returns (result, stats),
     * stats = one row per stage (dedup/compress/summarize/total) with rows,
-    * token totals, reduction percent, and wall millis.
+    * token totals, reduction percent, and wall millis. The staged path:
+    * each stage boundary is materialized so its figures are real.
     */
   def deduplicateChunksWithStats(chunks: DataFrame, groupCol: String, idCol: String,
                                  textCol: String, embCol: String, scoreCol: String,
@@ -67,7 +73,8 @@ object GraftEngine {
 
   /** retrieve_deduplicated with broker.go:165-190's stage stats
     * (retrieval/clustering/selection latencies + Retrieved/Clustered/
-    * Returned counters): returns (result, stats).
+    * Returned counters): returns (result, stats). The staged path: the
+    * public per-stage operators, each stage materialized and counted.
     */
   def retrieveDeduplicatedWithStats(corpus: DataFrame, queries: DataFrame,
                                     idCol: String, embCol: String,

@@ -584,16 +584,6 @@ object MetadataAggCollapse extends Rule[LogicalPlan] {
     conf.getConfString("spark.graft.metadataAgg.approxDistinct.enabled",
       "false").toBoolean
 
-  /** Versioned snapshots are immutable, so a (root, version, column,
-    * shard subset) estimate never changes — memoized across queries.
-    * The shard subset enters the key as a fixed-size MD5 digest, not the
-    * joined id list: a wide store's admitted-shard lists are unbounded
-    * key material (thousands of ids per entry) where the digest is 32
-    * chars regardless.
-    */
-  private val ndvCache = new graft.util.LruCache[
-    (String, Long, String, String), Long](256)
-
   private def shardSetDigest(shards: Seq[Int]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = java.nio.ByteBuffer.allocate(4 * shards.length)
@@ -601,15 +591,6 @@ object MetadataAggCollapse extends Rule[LogicalPlan] {
     md.digest(buf.array()).map("%02x".format(_)).mkString
   }
 
-  /** The merged-HLL distinct estimate of `c` over `shards` — registers
-    * max-merge driver-side (each array is 2^p ints off the registry; no
-    * data file opens), then the estimate evaluates through
-    * [[graft.operators.SketchOps.hllEstimate]]'s own expression tree
-    * over a ONE-ROW local frame, so the double arithmetic can never
-    * drift from the verb's. That evaluation is a plan-time, single-row,
-    * scan-free job — bounded and memoized, same cost class as the join
-    * dispatch's registry probes.
-    */
   /** The EXACT distinct-label count of `c` over `shards` — the per-shard
     * label sets union (nulls are not values, so the null-label entry
     * never counts); None when the column carries no label stats or any
@@ -626,11 +607,19 @@ object MetadataAggCollapse extends Rule[LogicalPlan] {
       }.toSet.size.toLong)
     }
 
+  /** The merged-HLL distinct estimate of `c` over `shards` — registers
+    * max-merge driver-side (each array is 2^p ints off the registry; no
+    * data file opens), then the estimate evaluates through
+    * [[graft.operators.SketchOps.hllEstimate]]'s own expression tree
+    * over a ONE-ROW local frame, so the double arithmetic can never
+    * drift from the verb's. That evaluation is a plan-time, single-row,
+    * scan-free job — bounded and memoized, same cost class as the join
+    * dispatch's registry probes.
+    */
   private def mergedNdv(idx: SketchFileIndex, c: String,
                         shards: Seq[Int]): Option[Long] =
     idx.hllRegistersFor(c).map { case (regs, p) =>
-      ndvCache.getOrElseUpdate(
-        (idx.tableRoot, idx.tableVersion, c, shardSetDigest(shards))) {
+      graft.core.MetaCache.ndv(idx.tableRoot, idx.tableVersion, c, shardSetDigest(shards)) {
         val m = 1 << p
         val merged = new Array[Int](m)
         shards.foreach { s =>

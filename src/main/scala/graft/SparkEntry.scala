@@ -607,11 +607,10 @@ object SparkEntry {
           transform(sequence(lit(0), lit(31)),
             d => when(d.cast("long") === (col("l_partkey") + col("l_suppkey")) % 32,
               lit(1f)).otherwise(lit(0f))).as("embedding"))
-      // fused path: one keyed shuffle for cluster+select+MMR (the composed
-      // form is exercised by q27; results are identical — see Round2Spec)
-      graft.operators.PipelineOps.dedupPipelineFused(
+      graft.operators.PipelineOps.dedupPipeline(
         chunks, "request_group", "chunk_id", "text", "embedding", "score",
         graft.operators.PipelineOps.PipelineConfig(targetK = 8, minChunkLength = 0))
+        .withColumn("cluster_id", col("cluster_id").cast("long")) // the oracle's is BIGINT
     },
 
     // §3.2 broker stage 1: over-fetch K'=50 neighbors per query via the

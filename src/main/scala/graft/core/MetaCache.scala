@@ -34,12 +34,27 @@ object MetaCache {
       frame.select(cols.map(col): _*).collect()
     }
 
-  /** Drop every memoized projection (wired into
+  /** Merged-HLL distinct estimates, keyed by (root, version, column,
+    * shard-set digest): a versioned snapshot is immutable, so the estimate
+    * over a shard subset never changes. The shard subset enters the key as
+    * a fixed-size digest, not the joined id list — a wide store's
+    * admitted-shard lists are unbounded key material.
+    */
+  private val ndvCache =
+    new graft.util.LruCache[(String, Long, String, String), Long](256)
+
+  /** The memoized distinct estimate of `c` over the shard set digested as
+    * `shardDigest` in `root`'s version `v`.
+    */
+  def ndv(root: String, v: Long, c: String, shardDigest: String)(estimate: => Long): Long =
+    ndvCache.getOrElseUpdate((root, v, c, shardDigest))(estimate)
+
+  /** Drop every memoized projection and estimate (wired into
     * `GraftEngine.releaseCaches`).
     */
-  def clear(): Unit = cache.clear()
+  def clear(): Unit = { cache.clear(); ndvCache.clear() }
 
-  /** Drop every memoized projection of `root` — called by
+  /** Drop every memoized projection and estimate of `root` — called by
     * [[TableStore.commitStaged]] on every successful commit, which closes
     * the staleness edge structurally: a root deleted and re-created at the
     * same path restarts version numbering, so without invalidation the
@@ -47,7 +62,10 @@ object MetaCache {
     * OLD store's rows. Entries for still-on-disk versions re-collect on
     * next use (registry-sized reads — planning cost, never data).
     */
-  def invalidateRoot(root: String): Unit = cache.removeIf(_._1 == root)
+  def invalidateRoot(root: String): Unit = {
+    cache.removeIf(_._1 == root)
+    ndvCache.removeIf(_._1 == root)
+  }
 
   /** Number of memoized projections (for tests). */
   def size: Int = cache.size

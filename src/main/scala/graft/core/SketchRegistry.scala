@@ -189,7 +189,10 @@ object SketchRegistry {
       try listing.anyMatch(p => Files.isDirectory(p) &&
         p.getFileName.toString.startsWith("shard="))
       finally listing.close()
+    // cast explicitly: with partition-column type inference off the shard
+    // directory value would read back as a string
     if (hasShardDir) spark.read.parquet(staging.toString)
+      .withColumn("shard", col("shard").cast("int"))
     else fallback.filter(lit(false))
   }
 

@@ -3,20 +3,25 @@ package graft.operators
 import graft.util.OpCaches.TrackedPersist
 
 import graft.functions.{CompressFunctions, TextFunctions}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The flagship dedup pipeline (reference §3.1, cmd/api.go:405-588 →
-  * pkg/pipeline/pipeline.go): per request-group,
+  * pkg/pipeline/pipeline.go) and the §3.2 retrieve broker. Both run the
+  * same per-group selection core ([[selectPerGroup]]) in ONE keyed
+  * shuffle:
   *
   *   cluster (agglomerative, threshold 0.15, average linkage)
-  *     → representative per cluster (by score)
-  *     → MMR re-rank to K (λ=0.5, K=8)
-  *     → extractive compression (ratio 0.5)
+  *     → representative per cluster (by `selectStrategy`)
+  *     → MMR re-rank to K (λ=0.5, K=8), or top-K by score
   *
-  * One Spark job; shuffle boundaries only at the two groupBys. The input is
-  * any DataFrame with (group, id, text, embedding, score) columns.
+  * then the pipeline's extractive compression (ratio 0.5) runs map-side
+  * after selection. The public per-stage operators
+  * ([[ClusterOps.agglomerativeCluster]], [[ClusterOps.selectRepresentatives]],
+  * [[ClusterOps.mmrRerank]]) compute the same stages composed with
+  * join-backs; the `WithStats` wrappers are the staged paths that
+  * materialize each stage for the reference's per-stage report.
   */
 object PipelineOps {
 
@@ -37,136 +42,101 @@ object PipelineOps {
       compressEnabled: Boolean = true,
       summarizeEnabled: Boolean = false)
 
-  def dedupPipeline(df0: DataFrame, groupCol: String, idCol: String, textCol: String,
-                    embCol: String, scoreCol: String,
-                    cfg: PipelineConfig = PipelineConfig()): DataFrame = {
-    // The input feeds both the clustering groupBy and the join-back below;
-    // persist it once instead of re-evaluating its lineage per branch.
-    val df = df0.persistTracked
+  /** One row into [[selectPerGroup]]: (group, id, text, embedding, score). */
+  private type Candidate = (Long, Long, String, Array[Float], Double)
 
-    // ── Stage 1: dedup (cluster → representative → MMR) ──
+  /** The per-group selection core, one `flatMapGroups` pass over the group
+    * key: rows sort by id (fixing the reference's insertion-order
+    * tie-breaks), cluster agglomeratively, keep one representative per
+    * cluster by `strategy`, then MMR the representatives (fed in id order)
+    * down to `k` — or, with `mmrLambda` None, keep the top `k` by
+    * (score desc, id asc). Every tie-break matches the composed operators:
+    * lowest id wins. Returns (group, id, cluster_id, rank, score, text).
+    */
+  private def selectPerGroup(in: Dataset[Candidate], clusterCfg: ClusterAlgs.ClusterConfig,
+                             strategy: String, mmrLambda: Option[Double], k: Int,
+                             maxGroupSize: Int): Dataset[(Long, Long, Int, Int, Double, String)] = {
+    val spark = in.sparkSession
+    import spark.implicits._
+    in.groupByKey(_._1).flatMapGroups { (g, it) =>
+      val rows = it.toIndexedSeq.sortBy(_._2)
+      require(rows.length <= maxGroupSize,
+        s"group $g has ${rows.length} rows > maxGroupSize=$maxGroupSize; " +
+          "use DedupOps LSH paths for corpus-scale groups (O(N^2)-O(N^3) here)")
+      val embs = rows.map(_._4)
+      val cids = ClusterAlgs.agglomerate(embs, clusterCfg)
+      // text length in code points, as Spark's length() counts them
+      // (String.length counts UTF-16 units and diverges on
+      // supplementary-plane characters)
+      def cpLen(i: Int): Int = {
+        val t = rows(i)._3
+        if (t == null) 0 else t.codePointCount(0, t.length)
+      }
+      val reps = rows.indices.groupBy(cids(_)).toSeq.map { case (_, idxs0) =>
+        val idxs = idxs0.toIndexedSeq
+        strategy match {
+          case "score"  => idxs.maxBy(i => (rows(i)._5, -rows(i)._2))
+          case "length" => idxs.maxBy(i => (cpLen(i), -rows(i)._2))
+          case "centroid" =>
+            val cent = ClusterAlgs.centroid(idxs.map(embs(_)))
+            idxs.minBy(i => (ClusterAlgs.cosineDist(embs(i), cent), rows(i)._2))
+          case "hybrid" =>
+            val cent = ClusterAlgs.centroid(idxs.map(embs(_)))
+            idxs(ClusterAlgs.selectHybrid(
+              idxs.map(i => rows(i)._5), idxs.map(embs(_)),
+              idxs.map(cpLen), cent))
+          case other => throw new IllegalArgumentException(s"unknown strategy $other")
+        }
+      }.sortBy(i => rows(i)._2).toIndexedSeq
+      val picked = mmrLambda match {
+        case Some(lambda) =>
+          ClusterAlgs.mmrSelect(reps.map(embs(_)), reps.map(i => rows(i)._5), lambda, k)
+            .toSeq.map(reps(_))
+        case None => reps.sortBy(i => (rows(i)._5, -rows(i)._2)).reverse.take(k)
+      }
+      picked.zipWithIndex.map { case (i, rank) =>
+        (g, rows(i)._2, cids(i), rank + 1, rows(i)._5, rows(i)._3)
+      }
+    }
+  }
+
+  /** The §3.1 pipeline over any DataFrame with (group, id, text,
+    * embedding, score) columns: the selection core in one keyed shuffle,
+    * then compression and the optional summary as map-side expressions.
+    * Returns (group, id, cluster_id, mmr_rank, score, compressed) with the
+    * group, id and score columns in their input types. With dedup off,
+    * rows pass through unshuffled (cluster_id 0L, mmr_rank 0).
+    */
+  def dedupPipeline(df: DataFrame, groupCol: String, idCol: String, textCol: String,
+                    embCol: String, scoreCol: String,
+                    cfg: PipelineConfig = PipelineConfig(),
+                    maxGroupSize: Int = 10000): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
     val selected =
       if (cfg.dedupEnabled) {
-        // 1a. cluster per group
-        val clustered = ClusterOps.agglomerativeCluster(
-          df, groupCol, idCol, embCol,
-          ClusterAlgs.ClusterConfig(threshold = cfg.clusterThreshold, linkage = cfg.linkage))
-        val withCluster = df.join(
-          clustered,
-          df(groupCol).cast("long") === clustered("group") && df(idCol).cast("long") === clustered("id")
-        ).select(df.columns.map(df(_)) :+ clustered("cluster_id"): _*)
-
-        // 1b. representative per (group, cluster)
-        val reps = ClusterOps.selectRepresentatives(
-          withCluster, Seq(groupCol, "cluster_id"), idCol, embCol, scoreCol, textCol,
-          cfg.selectStrategy)
-
-        // 1c. MMR to K per group
-        val mmr = ClusterOps.mmrRerank(reps, groupCol, idCol, embCol, scoreCol,
-          cfg.mmrLambda, cfg.targetK)
-        reps.join(
-          mmr,
-          reps(groupCol).cast("long") === mmr("group") && reps(idCol).cast("long") === mmr("id")
-        ).select(reps.columns.map(reps(_)) :+ mmr("mmr_rank"): _*)
+        val in = df.select(
+            col(groupCol).cast("long"), col(idCol).cast("long"),
+            col(textCol).cast("string"), col(embCol), col(scoreCol).cast("double"))
+          .as[Candidate]
+        val Seq(groupType, idType, scoreType) =
+          df.select(col(groupCol), col(idCol), col(scoreCol)).schema.map(_.dataType)
+        selectPerGroup(in,
+            ClusterAlgs.ClusterConfig(threshold = cfg.clusterThreshold, linkage = cfg.linkage),
+            cfg.selectStrategy, Some(cfg.mmrLambda), cfg.targetK, maxGroupSize)
+          .toDF("__g", "__id", "cluster_id", "mmr_rank", "__score", "__text")
+          .select(col("__g").cast(groupType).as(groupCol),
+            col("__id").cast(idType).as(idCol), col("cluster_id"), col("mmr_rank"),
+            col("__score").cast(scoreType).as(scoreCol), col("__text").as(textCol))
       } else {
         df.withColumn("cluster_id", lit(0L)).withColumn("mmr_rank", lit(0))
       }
 
-    // ── Stage 2: compress (extractive) ──
     val compressed =
       if (cfg.compressEnabled)
         selected.withColumn("compressed",
           CompressFunctions.extract_salient(col(textCol), cfg.compressRatio, cfg.minChunkLength))
       else selected.withColumn("compressed", col(textCol))
-
-    // ── Stage 3: summarize (optional) ──
-    val summarized =
-      if (cfg.summarizeEnabled)
-        compressed.withColumn("compressed",
-          CompressFunctions.paragraph_summary(col("compressed")))
-      else compressed
-
-    summarized.select(col(groupCol), col(idCol), col("cluster_id"), col("mmr_rank"),
-      col(scoreCol), col("compressed"))
-  }
-
-  /** The same cluster → representative → MMR pipeline fused into ONE
-    * keyed shuffle: every per-group stage runs inside a single
-    * flatMapGroups pass, so the corpus is shuffled once on the group key
-    * instead of cluster-shuffle + join-back + window + MMR-shuffle +
-    * join-back (the composable `dedupPipeline` keeps the separated form for
-    * callers that want to tap intermediate stages). Compression stays a
-    * map-side expression after selection. Same results, same tie-breaks
-    * (rows sort by id before the sequential cores, representatives feed MMR
-    * in id order).
-    *
-    * This is the 100 TB-facing fast path for the fixed-shape pipeline: at
-    * N groups × conversation-sized rows, total shuffle bytes drop ~4-5× vs
-    * the composed plan.
-    */
-  def dedupPipelineFused(df: DataFrame, groupCol: String, idCol: String, textCol: String,
-                         embCol: String, scoreCol: String,
-                         cfg: PipelineConfig = PipelineConfig(),
-                         maxGroupSize: Int = 10000): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val clusterCfg = ClusterAlgs.ClusterConfig(
-      threshold = cfg.clusterThreshold, linkage = cfg.linkage)
-    val strategy = cfg.selectStrategy
-    val (lambda, k) = (cfg.mmrLambda, cfg.targetK)
-    val runDedup = cfg.dedupEnabled
-    val selected = df.select(
-        col(groupCol).cast("long"), col(idCol).cast("long"),
-        col(textCol).cast("string"), col(embCol), col(scoreCol).cast("double"))
-      .as[(Long, Long, String, Array[Float], Double)]
-      .groupByKey(_._1)
-      .flatMapGroups { (g, it) =>
-        val rows = it.toIndexedSeq.sortBy(_._2)
-        if (!runDedup) {
-          rows.map(r => (g, r._2, 0L, 0, r._5, r._3))
-        } else {
-          require(rows.length <= maxGroupSize,
-            s"group $g has ${rows.length} rows > maxGroupSize=$maxGroupSize; " +
-              "use DedupOps LSH paths for corpus-scale groups (O(N^2)-O(N^3) here)")
-          val embs = rows.map(_._4)
-          val cids = ClusterAlgs.agglomerate(embs, clusterCfg)
-          // text length in code points to match the composed pipeline's
-          // Spark length() (String.length counts UTF-16 units and diverges
-          // on supplementary-plane characters)
-          def cpLen(i: Int): Int = {
-            val t = rows(i)._3
-            if (t == null) 0 else t.codePointCount(0, t.length)
-          }
-          val reps = rows.indices.groupBy(cids(_)).toSeq.map { case (cid, idxs0) =>
-            val idxs = idxs0.toIndexedSeq
-            strategy match {
-              case "score"  => idxs.maxBy(i => (rows(i)._5, -rows(i)._2))
-              case "length" => idxs.maxBy(i => (cpLen(i), -rows(i)._2))
-              case "centroid" =>
-                val cent = ClusterAlgs.centroid(idxs.map(embs(_)))
-                idxs.minBy(i => (ClusterAlgs.cosineDist(embs(i), cent), rows(i)._2))
-              case "hybrid" =>
-                val cent = ClusterAlgs.centroid(idxs.map(embs(_)))
-                idxs(ClusterAlgs.selectHybrid(
-                  idxs.map(i => rows(i)._5), idxs.map(embs(_)),
-                  idxs.map(cpLen), cent))
-              case other => throw new IllegalArgumentException(s"unknown strategy $other")
-            }
-          }.sortBy(i => rows(i)._2).toIndexedSeq // representatives feed MMR in id order
-          val sel = ClusterAlgs.mmrSelect(
-            reps.map(embs(_)), reps.map(i => rows(i)._5), lambda, k)
-          sel.zipWithIndex.map { case (ri, rank) =>
-            val i = reps(ri)
-            (g, rows(i)._2, cids(i).toLong, rank + 1, rows(i)._5, rows(i)._3)
-          }.toSeq
-        }
-      }
-      .toDF(groupCol, idCol, "cluster_id", "mmr_rank", scoreCol, "__txt")
-    val compressed =
-      if (cfg.compressEnabled)
-        selected.withColumn("compressed",
-          CompressFunctions.extract_salient(col("__txt"), cfg.compressRatio, cfg.minChunkLength))
-      else selected.withColumn("compressed", col("__txt"))
     val summarized =
       if (cfg.summarizeEnabled)
         compressed.withColumn("compressed",
@@ -188,63 +158,37 @@ object PipelineOps {
     * DefaultBrokerConfig's OverFetchK=50 at broker.go:52): per query vector,
     *
     *   over-fetch top-K' chunks (KNN, map-side top-k combine)
-    *     → agglomerative-cluster the K' chunks
-    *     → representative per cluster (by score = query similarity — the
-    *       RerankWithQuery convention, mmr.go:191-205: retrieval cosine IS
-    *       the relevance)
-    *     → MMR down to targetK (or plain top-K by score when MMR is off)
+    *     → the selection core over the K' chunks, keyed by query, with
+    *       score = query similarity (the RerankWithQuery convention,
+    *       mmr.go:191-205: retrieval cosine IS the relevance) and
+    *       representative by score; MMR down to targetK, or plain top-K
+    *       by score when MMR is off
     *
-    * Scale shape: the corpus is touched only by the KNN stage (never
-    * shuffled whole); everything after runs on nQueries × K' rows, keyed by
-    * query. Returns (query_id, neighbor_id, sim, final_rank).
+    * Scale shape: the corpus is touched only by the KNN stage and the
+    * broadcast embedding join-back (never shuffled whole); the selection
+    * runs on nQueries × K' rows. Returns (query_id, neighbor_id, sim,
+    * final_rank).
     */
   def retrieveBroker(corpus: DataFrame, queries: DataFrame,
                      idCol: String, embCol: String,
                      qidCol: String, qembCol: String,
                      cfg: BrokerConfig = BrokerConfig()): DataFrame = {
-    // Step 1: over-fetch. sim is the cosine to the query — downstream score.
-    // The fetched set (nQueries × K' rows) is the broadcast side of the
-    // embedding join-back — the corpus is only scanned, never shuffled.
-    // chunks feeds two plan branches (clustering and the cluster join-back),
-    // so persist it rather than re-running the KNN per branch.
+    val spark = corpus.sparkSession
+    import spark.implicits._
     val fetched = KnnOps.bruteForceKnn(
       corpus, queries, cfg.overFetchK, idCol, embCol, qidCol, qembCol)
     val chunks = corpus
       .select(col(idCol).cast("long").as("neighbor_id"), col(embCol).as("emb"))
       .join(broadcast(fetched), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"), col("emb"), col("sim"))
-      .persistTracked
-
-    // Step 2: cluster the fetched chunks per query.
-    val clustered = ClusterOps.agglomerativeCluster(
-      chunks, "query_id", "neighbor_id", "emb",
-      ClusterAlgs.ClusterConfig(threshold = cfg.clusterThreshold, linkage = cfg.linkage))
-    val withCluster = chunks.join(
-      clustered,
-      chunks("query_id") === clustered("group") && chunks("neighbor_id") === clustered("id"))
-      .select(chunks("query_id"), chunks("neighbor_id"), chunks("emb"), chunks("sim"),
-        clustered("cluster_id"))
-
-    // Step 3: representative per cluster, by query similarity.
-    val reps = ClusterOps.selectRepresentatives(
-      withCluster, Seq("query_id", "cluster_id"), "neighbor_id", "emb", "sim", "sim",
-      "score")
-
-    // Step 4: MMR (or top-K by score) down to targetK.
-    if (cfg.enableMMR) {
-      val mmr = ClusterOps.mmrRerank(
-        reps, "query_id", "neighbor_id", "emb", "sim", cfg.mmrLambda, cfg.targetK)
-      reps.join(mmr,
-        reps("query_id") === mmr("group") && reps("neighbor_id") === mmr("id"))
-        .select(reps("query_id"), reps("neighbor_id"), reps("sim"),
-          mmr("mmr_rank").as("final_rank"))
-    } else {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("sim").desc, col("neighbor_id").asc)
-      reps.withColumn("final_rank", row_number().over(w))
-        .filter(col("final_rank") <= cfg.targetK)
-        .select(col("query_id"), col("neighbor_id"), col("sim"), col("final_rank"))
-    }
+      .select(col("query_id"), col("neighbor_id"), lit(null).cast("string"),
+        col("emb"), col("sim"))
+      .as[Candidate]
+    selectPerGroup(chunks,
+        ClusterAlgs.ClusterConfig(threshold = cfg.clusterThreshold, linkage = cfg.linkage),
+        "score", if (cfg.enableMMR) Some(cfg.mmrLambda) else None, cfg.targetK,
+        maxGroupSize = 10000)
+      .toDF("query_id", "neighbor_id", "cluster_id", "final_rank", "sim", "text")
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("final_rank"))
   }
 
   // ── Per-stage observability (reference pkg/pipeline/pipeline.go:16-32
@@ -271,9 +215,9 @@ object PipelineOps {
     * returns (result, stats) where stats has one row per stage
     * (dedup → compress → summarize) and a `total` row. Each stage boundary
     * is materialized (persist + one count/token-sum job) so its wall time
-    * and row/token deltas are real — this is the observability wrapper; the
-    * plain [[dedupPipeline]]/[[dedupPipelineFused]] stay the zero-overhead
-    * paths. Results are identical to [[dedupPipeline]] (spec-asserted).
+    * and row/token deltas are real — this is the staged observability
+    * wrapper; the plain [[dedupPipeline]] stays the zero-overhead path.
+    * Results are identical to [[dedupPipeline]] (spec-asserted).
     */
   def dedupPipelineWithStats(df0: DataFrame, groupCol: String, idCol: String,
                              textCol: String, embCol: String, scoreCol: String,
@@ -327,8 +271,10 @@ object PipelineOps {
   /** [[retrieveBroker]] plus broker.go's stage stats: one row per broker
     * stage (retrieval / clustering / selection) with rows_out = the
     * reference's Retrieved / Clustered / Returned counters, plus `total`.
-    * Token columns are zero (the broker stages carry no text). Results are
-    * identical to [[retrieveBroker]] (spec-asserted).
+    * Token columns are zero (the broker stages carry no text). The staged
+    * path: the public per-stage operators composed with join-backs, each
+    * stage persisted and counted. Results are identical to
+    * [[retrieveBroker]] (spec-asserted).
     */
   def retrieveBrokerWithStats(corpus: DataFrame, queries: DataFrame,
                               idCol: String, embCol: String,

@@ -108,7 +108,7 @@ object Pipeline {
     }
     val result = timed("dedup+compress") {
       val r = graft.util.OpCaches.trackPersist(
-        PipelineOps.dedupPipelineFused(chunks, "g", "ck", "text", "embedding", "score", cfg,
+        PipelineOps.dedupPipeline(chunks, "g", "ck", "text", "embedding", "score", cfg,
           maxGroupSize = maxGroupSize)
           .join(chunks.select(col("ck"), col("orig_id")), "ck")
           .select(col("orig_id").as("id"), col("cluster_id"), col("mmr_rank"),

@@ -946,6 +946,17 @@ class MetadataAggSpec extends AnyFunSuite with SparkTest
     }
   }
 
+  private def withNdv[T](body: => T): T = {
+    spark.conf.set("spark.graft.metadataAgg.approxDistinct.enabled", "true")
+    try body
+    finally spark.conf
+      .unset("spark.graft.metadataAgg.approxDistinct.enabled")
+  }
+
+  private def verbEst(df: DataFrame, c: String, p: Int): Long =
+    graft.operators.SketchOps.hllCardinality(df, Nil, c, p)
+      .collect().head.getLong(0) / 1000000L
+
   test("approx_count_distinct collapses to merged registry HLLs (opt-in) — bit-identical to the verb") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -955,15 +966,6 @@ class MetadataAggSpec extends AnyFunSuite with SparkTest
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(allScans)
     }
-    def withNdv[T](body: => T): T = {
-      spark.conf.set("spark.graft.metadataAgg.approxDistinct.enabled", "true")
-      try body
-      finally spark.conf
-        .unset("spark.graft.metadataAgg.approxDistinct.enabled")
-    }
-    def verbEst(df: DataFrame, c: String, p: Int): Long =
-      graft.operators.SketchOps.hllCardinality(df, Nil, c, p)
-        .collect().head.getLong(0) / 1000000L
     // HASH layout: the key's registry HLL answers the table-wide ndv
     val hroot = java.nio.file.Files.createTempDirectory("magg_adh").toString
     val hdf = (0 until 4000).map(i => ((i % 700).toLong, i.toLong))
@@ -1038,6 +1040,28 @@ class MetadataAggSpec extends AnyFunSuite with SparkTest
         assert(collapsed(q))
         assert(q.collect().head.getLong(0) ==
           verbEst(rdf.unionByName(batch), "u", 12))
+      }
+    }
+  }
+
+  test("approx-distinct answers follow a root deleted and re-created at the same path") {
+    val root = java.nio.file.Files.createTempDirectory("magg_adre").toString
+    def commitAndEstimate(df: DataFrame): Long = {
+      SketchRegistry.commitWithSketches(df, root, "k", shardsLog2 = 3, hllP = 12)
+      SketchFileIndex.readIndexed(spark, root).createOrReplaceTempView("magg_adre")
+      val q = spark.sql("SELECT approx_count_distinct(k) AS d FROM magg_adre")
+      assert(collapsed(q))
+      q.collect().head.getLong(0)
+    }
+    val first = (0 until 4000).map(i => ((i % 700).toLong, i.toLong)).toDF("k", "v")
+    val second = (0 until 4000).map(i => ((i % 90).toLong, i.toLong)).toDF("k", "v")
+    withRule {
+      withNdv {
+        assert(commitAndEstimate(first) == verbEst(first, "k", 12))
+        // the new incarnation restarts at version 0 over the same shard set,
+        // so only invalidation keeps the old estimate from answering
+        assert(new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively())
+        assert(commitAndEstimate(second) == verbEst(second, "k", 12))
       }
     }
   }

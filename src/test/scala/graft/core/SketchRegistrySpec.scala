@@ -17,6 +17,21 @@ class SketchRegistrySpec extends AnyFunSuite with SparkTest {
         !f.getPath.contains("_sketches"))
   }
 
+  test("registry shard column stays int with partition type inference off") {
+    // a separate session: the conf must not leak into suites running alongside
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    val root = java.nio.file.Files.createTempDirectory("skreg_noinfer").toString
+    val df = s2.range(0, 800).select(col("id"), (col("id") % 7).as("v"))
+    SketchRegistry.commitWithSketches(df, root, "id", shardsLog2 = 3)
+    val reg = SketchRegistry.registry(s2, root)
+    assert(reg.schema("shard").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(reg.count() == 8L)
+    // the probe path reads shard ids off the registry rows
+    val hit = SketchRegistry.lookupWithSketches(s2, root, 42L).collect()
+    assert(hit.map(_.getAs[Long]("id")).toSeq == Seq(42L))
+  }
+
   test("commitWithSketches: layout round-trips, registry rides the commit, lookups prune") {
     val root = java.nio.file.Files.createTempDirectory("skreg").toString
     val df = (0 until 800).map(i => (i.toLong, s"p$i")).toDF("id", "payload")

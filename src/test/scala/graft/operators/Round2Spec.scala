@@ -297,22 +297,74 @@ class Round2Spec extends AnyFunSuite with SparkTest {
     assert(r1.select("query_id", "neighbor_id", "rank").collect().map(_.toSeq).toSet == oneShot)
   }
 
-  // --- fused pipeline equivalence
+  // --- one per-group selection core vs the public per-stage operators
 
-  test("dedupPipelineFused matches the composable pipeline on real data") {
+  /** The cluster → representative → MMR → compress chain spelled out with
+    * the public operators: a cluster shuffle and join-back, the
+    * representative window, an MMR shuffle and a second join-back.
+    */
+  private def composedPipeline(df: DataFrame, g: String, id: String, text: String,
+                               emb: String, score: String,
+                               cfg: PipelineOps.PipelineConfig): DataFrame = {
+    val clustered = ClusterOps.agglomerativeCluster(df, g, id, emb,
+      ClusterAlgs.ClusterConfig(threshold = cfg.clusterThreshold, linkage = cfg.linkage))
+    val withCluster = df.join(clustered,
+      df(g).cast("long") === clustered("group") && df(id).cast("long") === clustered("id"))
+      .select(df.columns.map(df(_)) :+ clustered("cluster_id"): _*)
+    val reps = ClusterOps.selectRepresentatives(
+      withCluster, Seq(g, "cluster_id"), id, emb, score, text, cfg.selectStrategy)
+    val mmr = ClusterOps.mmrRerank(reps, g, id, emb, score, cfg.mmrLambda, cfg.targetK)
+    reps.join(mmr, reps(g).cast("long") === mmr("group") && reps(id).cast("long") === mmr("id"))
+      .select(reps(g), reps(id), reps("cluster_id"), mmr("mmr_rank"), reps(score),
+        graft.functions.CompressFunctions.extract_salient(
+          reps(text), cfg.compressRatio, cfg.minChunkLength).as("compressed"))
+  }
+
+  test("dedupPipeline matches the composition of the public operators") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val embs = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val chunks = PipelineOps.chunkTable(docs, embs)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("request_group").cast("long"), col("doc_id").cast("long"),
-        col("cluster_id").cast("long"), col("mmr_rank").cast("int"), col("compressed"))
-        .collect().map(_.toSeq).toSet
-    val composed = canon(PipelineOps.dedupPipeline(
-      chunks, "request_group", "doc_id", "text", "embedding", "score"))
-    val fused = canon(PipelineOps.dedupPipelineFused(
-      chunks, "request_group", "doc_id", "text", "embedding", "score"))
-    assert(fused == composed)
-    assert(fused.nonEmpty)
+    val chunks = PipelineOps.chunkTable(docs, embs).cache()
+    def canon(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    for (strategy <- Seq("score", "length", "centroid", "hybrid")) {
+      val cfg = PipelineOps.PipelineConfig(selectStrategy = strategy)
+      val composed = canon(composedPipeline(
+        chunks, "request_group", "doc_id", "text", "embedding", "score", cfg))
+      val single = canon(PipelineOps.dedupPipeline(
+        chunks, "request_group", "doc_id", "text", "embedding", "score", cfg))
+      assert(single == composed, s"strategy $strategy")
+      assert(single.nonEmpty)
+    }
+    chunks.unpersist()
+  }
+
+  test("facade output schemas: dedup and retrieve columns for int and long keys") {
+    import org.apache.spark.sql.types._
+    def fields(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val text = "First sentence about the topic. Second sentence adds words."
+    val intChunks = (0 until 6).map(i => (i % 2, i, text, vec(i % 3), i.toFloat))
+      .toDF("g", "id", "text", "emb", "score")
+    val longChunks = intChunks.select(col("g").cast("long"), col("id").cast("long"),
+      col("text"), col("emb"), col("score").cast("double"))
+    def dedup(df: DataFrame, cfg: PipelineOps.PipelineConfig = PipelineOps.PipelineConfig()) =
+      fields(graft.GraftEngine.deduplicateChunks(df, "g", "id", "text", "emb", "score", cfg))
+    def dedupSchema(key: DataType, score: DataType, cluster: DataType) = Seq(
+      "g" -> key, "id" -> key, "cluster_id" -> cluster, "mmr_rank" -> IntegerType,
+      "score" -> score, "compressed" -> StringType)
+    assert(dedup(intChunks) == dedupSchema(IntegerType, FloatType, IntegerType))
+    assert(dedup(longChunks) == dedupSchema(LongType, DoubleType, IntegerType))
+    val noDedup = PipelineOps.PipelineConfig(dedupEnabled = false)
+    assert(dedup(intChunks, noDedup) == dedupSchema(IntegerType, FloatType, LongType))
+    assert(dedup(longChunks, noDedup) == dedupSchema(LongType, DoubleType, LongType))
+
+    val retrieveSchema = Seq("query_id" -> LongType, "neighbor_id" -> LongType,
+      "sim" -> DoubleType, "final_rank" -> IntegerType)
+    for (corpus <- Seq(intChunks, longChunks); mmr <- Seq(true, false)) {
+      val out = graft.GraftEngine.retrieveDeduplicated(
+        corpus, corpus.filter(col("id") < 2), "id", "emb", "id", "emb",
+        PipelineOps.BrokerConfig(overFetchK = 4, targetK = 2, enableMMR = mmr))
+      assert(fields(out) == retrieveSchema, s"mmr=$mmr")
+      assert(out.count() == 4)
+    }
   }
 
   // --- chunking

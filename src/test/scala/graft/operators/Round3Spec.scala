@@ -112,10 +112,11 @@ class Round3Spec extends AnyFunSuite with SparkTest {
     graft.GraftEngine.releaseCaches() // start clean
     val corpus = (0L until 40L).map(i => i -> vec((i % 8).toInt)).toDF("vid", "emb")
     val queries = corpus.filter(col("vid") < 2)
-    val out = PipelineOps.retrieveBroker(corpus, queries, "vid", "emb", "vid", "emb",
+    val (out, _) = PipelineOps.retrieveBrokerWithStats(corpus, queries,
+      "vid", "emb", "vid", "emb",
       PipelineOps.BrokerConfig(overFetchK = 10, targetK = 3, enableMMR = false))
     assert(out.count() > 0)
-    assert(graft.util.OpCaches.trackedCount > 0, "broker persists its over-fetch")
+    assert(graft.util.OpCaches.trackedCount > 0, "the staged broker persists every stage")
     graft.GraftEngine.releaseCaches()
     assert(graft.util.OpCaches.trackedCount == 0)
     // released caches must not break re-evaluation (recompute from lineage)

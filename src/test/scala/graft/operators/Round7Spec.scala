@@ -22,18 +22,18 @@ class Round7Spec extends AnyFunSuite with SparkTest {
     val cfg = PipelineOps.PipelineConfig(targetK = 8, minChunkLength = 0)
 
     val (result, report) = graft.core.StageMetrics.withStageReport(spark) {
-      PipelineOps.dedupPipelineFused(
+      PipelineOps.dedupPipeline(
         chunks, "request_group", "doc_id", "text", "embedding", "score", cfg).collect()
     }
     val rows = report.collect()
-    assert(rows.nonEmpty, "listener must capture the fused plan's stages")
+    assert(rows.nonEmpty, "listener must capture the pipeline's stages")
     // scheduler-metrics attribution of the untouched plan: the scan reads
-    // every chunk row, and the fused pipeline shuffles each row EXACTLY
-    // once (the one-keyed-shuffle claim PlanSpec pins, here as measured
-    // record counts rather than plan shape)
+    // every chunk row, and the pipeline shuffles each row EXACTLY once
+    // (its one keyed shuffle, here as measured record counts rather than
+    // plan shape)
     assert(rows.map(_.getAs[Long]("records_read")).sum == rowsIn)
     assert(rows.map(_.getAs[Long]("shuffle_records_written")).sum == rowsIn,
-      "fused plan must shuffle each input row exactly once")
+      "the pipeline must shuffle each input row exactly once")
     assert(rows.map(_.getAs[Long]("shuffle_records_read")).sum == rowsIn)
     assert(rows.map(_.getAs[Long]("executor_run_ms")).sum > 0)
     assert(rows.map(_.getAs[Long]("wall_ms")).forall(_ >= 0))
