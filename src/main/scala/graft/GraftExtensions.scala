@@ -584,11 +584,20 @@ object MetadataAggCollapse extends Rule[LogicalPlan] {
     conf.getConfString("spark.graft.metadataAgg.approxDistinct.enabled",
       "false").toBoolean
 
-  private def shardSetDigest(shards: Seq[Int]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val buf = java.nio.ByteBuffer.allocate(4 * shards.length)
-    shards.foreach(buf.putInt)
-    md.digest(buf.array()).map("%02x".format(_)).mkString
+  /** A 128-bit cache-key digest of a shard set: two splitmix64 chains
+    * with different seeds over the ids (length-seeded, so a prefix never
+    * collides with the whole). Not cryptographic — it keys a memo, and a
+    * JDK digest algorithm can be unavailable (MD5 throws on FIPS JVMs).
+    */
+  private[graft] def shardSetDigest(shards: Seq[Int]): String = {
+    import graft.functions.HashKernels.splitmix64
+    var a = splitmix64(shards.length.toLong)
+    var b = splitmix64(~shards.length.toLong)
+    shards.foreach { s =>
+      a = splitmix64(a ^ s.toLong)
+      b = splitmix64(b + s.toLong)
+    }
+    f"$a%016x$b%016x"
   }
 
   /** The EXACT distinct-label count of `c` over `shards` — the per-shard

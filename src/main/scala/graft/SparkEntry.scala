@@ -1291,7 +1291,7 @@ object SparkEntry {
       }
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val state0 = graft.core.IncrementalAgg.aggregate(
-        s.read.parquet(s"$root/v_$v1"), Seq("source"), Seq("tokens"))
+        graft.core.TableStore.readVersion(s, root, v1), Seq("source"), Seq("tokens"))
       graft.core.IncrementalAgg.applyFeed(state0, feed, Seq("source"), Seq("tokens"))
     },
 
@@ -2380,7 +2380,7 @@ object SparkEntry {
       }
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val state0 = graft.core.IncrementalAgg.aggregateRollup(
-        s.read.parquet(s"$root/v_$v1"), Seq("source", "lang"), Seq("tokens"))
+        graft.core.TableStore.readVersion(s, root, v1), Seq("source", "lang"), Seq("tokens"))
       graft.core.IncrementalAgg.applyFeedRollup(
         state0, feed, Seq("source", "lang"), Seq("tokens"))
     },
@@ -2514,10 +2514,10 @@ object SparkEntry {
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val g = Seq("source", "lang")
       val state0 = graft.core.IncrementalAgg.aggregateHybrid(
-        s.read.parquet(s"$root/v_$v1"), g,
+        graft.core.TableStore.readVersion(s, root, v1), g,
         Seq("tokens"), Seq("doc_id", "tokens"), Seq("bucket"))
       graft.core.IncrementalAgg.applyFeedHybrid(state0, feed,
-        s.read.parquet(s"$root/v_$v2"), g,
+        graft.core.TableStore.readVersion(s, root, v2), g,
         Seq("tokens"), Seq("doc_id", "tokens"), Seq("bucket"))
     },
 
@@ -2715,9 +2715,9 @@ object SparkEntry {
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val g = Seq("source", "lang")
       val state0 = graft.core.IncrementalAgg.aggregateRollupHybrid(
-        s.read.parquet(s"$root/v_$v1"), g, Seq("tokens"), Seq("doc_id", "tokens"))
+        graft.core.TableStore.readVersion(s, root, v1), g, Seq("tokens"), Seq("doc_id", "tokens"))
       graft.core.IncrementalAgg.applyFeedRollupHybrid(state0, feed,
-        s.read.parquet(s"$root/v_$v2"), g, Seq("tokens"), Seq("doc_id", "tokens"))
+        graft.core.TableStore.readVersion(s, root, v2), g, Seq("tokens"), Seq("doc_id", "tokens"))
     },
 
     // Unigram end-to-end parity with the BPE materialization path (the
@@ -2872,9 +2872,9 @@ object SparkEntry {
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val g = Seq("source", "lang")
       val state0 = graft.operators.SketchOps.hllSketch(
-        s.read.parquet(s"$root/v_$v1"), g, "tokens", p = 9)
+        graft.core.TableStore.readVersion(s, root, v1), g, "tokens", p = 9)
       val advanced = graft.operators.SketchOps.applyFeedHllSketch(
-        state0, feed, s.read.parquet(s"$root/v_$v2"), g, "tokens", p = 9)
+        state0, feed, graft.core.TableStore.readVersion(s, root, v2), g, "tokens", p = 9)
       graft.operators.SketchOps.hllRollupFromSketches(advanced, g, p = 9)
     },
 
@@ -3010,7 +3010,7 @@ object SparkEntry {
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val g = Seq("source", "lang")
       val state0 = graft.operators.SketchOps.cmSketch(
-        s.read.parquet(s"$root/v_$v1"), g, "tokens", depth = 4, widthLog2 = 8)
+        graft.core.TableStore.readVersion(s, root, v1), g, "tokens", depth = 4, widthLog2 = 8)
       graft.operators.SketchOps.applyFeedCmSketch(state0, feed, g, "tokens",
           depth = 4, widthLog2 = 8)
         .select(col("source"), col("lang"),
@@ -3039,10 +3039,10 @@ object SparkEntry {
       }
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val state0 = graft.operators.SketchOps.bloomSketch(
-        s.read.parquet(s"$root/v_$v1"), Seq("source"), "tokens",
+        graft.core.TableStore.readVersion(s, root, v1), Seq("source"), "tokens",
         bitsLog2 = 12, k = 4)
       graft.operators.SketchOps.applyFeedBloomSketch(state0, feed,
-          s.read.parquet(s"$root/v_$v2"), Seq("source"), "tokens",
+          graft.core.TableStore.readVersion(s, root, v2), Seq("source"), "tokens",
           bitsLog2 = 12, k = 4)
         .select(col("source"), posexplode(col("bloom")).as(Seq("word", "bits")))
         .filter(col("bits") =!= 0)
@@ -3151,7 +3151,7 @@ object SparkEntry {
       }
       val feed = graft.core.TableStore.changeFeed(s, root, Seq("doc_id"), v1, v2)
       val state0 = graft.operators.SketchOps.quantileSketch(
-        s.read.parquet(s"$root/v_$v1"), Seq("source"), "tokens", subLog2 = 5)
+        graft.core.TableStore.readVersion(s, root, v1), Seq("source"), "tokens", subLog2 = 5)
       graft.operators.SketchOps.applyFeedQuantileSketch(state0, feed,
           Seq("source"), "tokens", subLog2 = 5)
         .select(col("source"), posexplode(col("qsk")).as(Seq("b", "c")))

@@ -171,29 +171,29 @@ object SketchRegistry {
     * the input pipeline evaluates ONCE, in the clustered data write; the
     * registry/zone-map then derives from a column-pruned columnar read
     * of what was just written, never from a second evaluation of the
-    * source). Must be called AFTER the staged data write and BEFORE any
-    * old-version files are hard-linked into `staging` — the parquet
-    * FileIndex lists files eagerly at read time, so the frame sees
-    * exactly the fresh write (maintenance verbs rely on this: the batch
-    * stats must not include linked-in old rows). Sketch/stat aggregations
-    * are order-free and parquet round-trips values exactly, so the
-    * derived registry is bit-identical to one aggregated from the source.
-    * Falls back to an empty frame with `fallback`'s schema when the write
-    * produced no shard directory (empty input).
+    * source). The read is PINNED to the parquet files of the `shard=`
+    * directories present when it is called, under the schema the staged
+    * write pinned ([[TableStore.writeShards]]), so old-version files
+    * hard-linked into `staging` afterwards can never enter the frame
+    * (maintenance verbs rely on this: the batch stats must not include
+    * linked-in old rows).
+    * Sketch/stat aggregations are order-free and parquet round-trips
+    * values exactly, so the derived registry is bit-identical to one
+    * aggregated from the source. Returns an empty frame with `written`'s
+    * schema when the write produced no shard file (empty input).
     */
   private[core] def readStaged(spark: SparkSession,
                                staging: java.nio.file.Path,
-                               fallback: DataFrame): DataFrame = {
-    val listing = Files.list(staging)
-    val hasShardDir =
-      try listing.anyMatch(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("shard="))
-      finally listing.close()
-    // cast explicitly: with partition-column type inference off the shard
-    // directory value would read back as a string
-    if (hasShardDir) spark.read.parquet(staging.toString)
-      .withColumn("shard", col("shard").cast("int"))
-    else fallback.filter(lit(false))
+                               written: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    def list(dir: java.nio.file.Path, glob: String): Seq[java.nio.file.Path] = {
+      val ds = Files.newDirectoryStream(dir, glob)
+      try ds.asScala.toSeq finally ds.close()
+    }
+    val files = list(staging, "shard=*").filter(Files.isDirectory(_))
+      .flatMap(list(_, "*.parquet")).map(_.toString)
+    if (files.isEmpty) written.filter(lit(false))
+    else TableStore.readDir(spark, staging.toString, files)
   }
 
   /** One registry row per non-empty shard: the key column's Bloom + HLL +
@@ -338,10 +338,8 @@ object SketchRegistry {
       .withColumn("shard", graft.functions.GraftFunctions.splitmix64(col("__kh"))
         .bitwiseAND(lit((n - 1).toLong)).cast("int"))
     TableStore.commitStaged(root, expectedVersion) { staging =>
-      clusterForWrite(sharded, col("__kh"), filesPerShard, n)
-        .drop("__kh")
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(clusterForWrite(sharded, col("__kh"), filesPerShard, n)
+        .drop("__kh"), staging, df.schema)
       // ONE evaluation of the commit input: the registry aggregates over
       // the just-written staged parquet (pruned to the registry's input
       // columns), not a second evaluation of the source — see readStaged
@@ -350,8 +348,7 @@ object SketchRegistry {
       val registry = buildRegistryRows(written, "__kh", bitsLog2, k, hllP,
         sketchCols, cmDepth, cmWidthLog2, sumCols, statsCols,
         labelCols, labelMax, _ => labelStatsCols)
-      registry.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_sketches").toString)
+      TableStore.writeDir(registry.coalesce(1), staging.resolve("_sketches"))
       Files.write(staging.resolve("_sketches_meta"),
         hashMetaText(keyCol, shardsLog2, bitsLog2, k, hllP, sketchCols,
           cmDepth, cmWidthLog2, if (keyIsString) "string" else "int",
@@ -442,17 +439,14 @@ object SketchRegistry {
       .withColumn("shard", graft.functions.GraftFunctions.splitmix64(col("__kh"))
         .bitwiseAND(lit((n - 1).toLong)).cast("int"))
     TableStore.commitStaged(root, expectedVersion) { staging =>
-      clusterForWrite(sharded, col("__kh"), filesPerShard, n)
-        .drop("__kh")
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(clusterForWrite(sharded, col("__kh"), filesPerShard, n)
+        .drop("__kh"), staging, df.schema)
       // single-evaluation commit: registry from the staged write (readStaged)
       val written = readStaged(df.sparkSession, staging, sharded.drop("__kh"))
         .withColumn("__kh", keyHashExprM(m))
       val registry = buildRegistryRows(written, "__kh", bitsLog2, k, hllP,
         sketchCols, cmDepth, cmWidthLog2, sumCols, statsCols)
-      registry.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_sketches").toString)
+      TableStore.writeDir(registry.coalesce(1), staging.resolve("_sketches"))
       Files.write(staging.resolve("_sketches_meta"),
         hashMetaText(m.keyCol, shardsLog2, bitsLog2, k, hllP, sketchCols,
           cmDepth, cmWidthLog2, s"multi:${kinds.mkString(",")}",
@@ -537,7 +531,7 @@ object SketchRegistry {
                version: Option[Long] = None): DataFrame = {
     val v = version.orElse(TableStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    spark.read.parquet(s"$root/v_$v/_sketches")
+    TableStore.readDir(spark, s"$root/v_$v/_sketches")
   }
 
   /** Per-shard planning statistics served off the registry ALONE — zero
@@ -669,16 +663,10 @@ object SketchRegistry {
       .filter(col("might_contain")).select(col("__orig"), col("shard"))
     val shards = admitted.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).sorted
-    if (shards.isEmpty)
-      (version match {
-        case Some(x) => TableStore.readVersion(spark, root, x)
-        case None    => TableStore.read(spark, root)
-      }).filter(lit(false))
-    else
-      spark.read.option("basePath", s"$root/v_$v")
-        .parquet(shards.map(s => s"$root/v_$v/shard=$s").toIndexedSeq: _*)
-        .join(admitted.select(col("__orig")),
-          col(m.keyCol) === col("__orig"), "left_semi")
+    if (shards.isEmpty) TableStore.readShards(spark, root, v, Nil)
+    else TableStore.readShards(spark, root, v, shards.toIndexedSeq)
+      .join(admitted.select(col("__orig")),
+        col(m.keyCol) === col("__orig"), "left_semi")
   }
 
   /** [[lookupManyWithSketches]] for a COMPOSITE-keyed table: probe TUPLES
@@ -719,11 +707,9 @@ object SketchRegistry {
       .select(col("shard") +: m.keyCols.indices.map(i => col(s"__orig$i")): _*)
     val shards = admitted.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).sorted
-    if (shards.isEmpty)
-      TableStore.readVersion(spark, root, v).filter(lit(false))
+    if (shards.isEmpty) TableStore.readShards(spark, root, v, Nil)
     else {
-      val data = spark.read.option("basePath", s"$root/v_$v")
-        .parquet(shards.map(s => s"$root/v_$v/shard=$s").toIndexedSeq: _*)
+      val data = TableStore.readShards(spark, root, v, shards.toIndexedSeq)
       val cond = m.keyCols.zipWithIndex
         .map { case (c, i) => data(c) === col(s"__orig$i") }
         .reduce(_ && _)
@@ -808,13 +794,8 @@ object SketchRegistry {
         case _ => true // unknown ⇒ diff it: a wasted read, never a missed row
       }
     }
-    def side(v: Long): DataFrame = {
-      val dirs = differ.filter(s =>
-        Files.isDirectory(Paths.get(root, s"v_$v", s"shard=$s")))
-      if (dirs.isEmpty) TableStore.readVersion(spark, root, v).filter(lit(false))
-      else spark.read.option("basePath", s"$root/v_$v")
-        .parquet(dirs.map(s => s"$root/v_$v/shard=$s"): _*)
-    }
+    def side(v: Long): DataFrame = TableStore.readShards(spark, root, v,
+      differ.filter(s => Files.isDirectory(Paths.get(root, s"v_$v", s"shard=$s"))))
     TableStore.changeFeedFrames(side(baseVersion), side(toVersion),
       idCols, baseVersion, toVersion)
   }
@@ -889,13 +870,8 @@ object SketchRegistry {
     val va = TableStore.resolveVersion(rootA, versionA)
     val vb = TableStore.resolveVersion(rootB, versionB)
     val shards = joinPrunedShards(spark, rootA, rootB, Some(va), Some(vb))
-    def side(root: String, v: Long) = shards match {
-      case Nil => TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss => spark.read.option("basePath", s"$root/v_$v")
-        .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-    }
-    val a = side(rootA, va)
-    val bRaw = side(rootB, vb).drop("shard")
+    val a = TableStore.readShards(spark, rootA, va, shards)
+    val bRaw = TableStore.readShards(spark, rootB, vb, shards).drop("shard")
     val collide = bRaw.columns.filter(c => !ma.keyCols.contains(c) &&
       a.columns.contains(c))
     val b = collide.foldLeft(bRaw)((d, c) => d.withColumnRenamed(c, s"${c}_b"))
@@ -938,14 +914,8 @@ object SketchRegistry {
                           version: Option[Long] = None): DataFrame = {
     val m = meta(root, version)
     val v = TableStore.resolveVersion(root, version)
-    prunedShardsBy(spark, root, c, values, Some(v)) match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case shards =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(LayoutLong.longCol(col(c)).isin(values: _*))
-    }
+    TableStore.readShards(spark, root, v, prunedShardsBy(spark, root, c, values, Some(v)))
+      .filter(LayoutLong.longCol(col(c)).isin(values: _*))
   }
 
   /** Keyed UPSERT/DELETE against a sketch-indexed table that rewrites and
@@ -983,8 +953,8 @@ object SketchRegistry {
     require(m.cmDepth > 0,
       s"$root's registry predates per-shard CM rows — re-commit with the " +
         "current commitWithSketches before applying changes")
-    TableStore.requireSameDataSchema(upserts,
-      TableStore.readVersion(spark, root, v), "upserts")
+    val table = TableStore.readVersion(spark, root, v)
+    TableStore.requireSameDataSchema(upserts, table, "upserts")
     val n = 1 << m.shardsLog2
     val kc = m.keyCols
     require(deleteKeys.columns.length == kc.size,
@@ -1020,11 +990,7 @@ object SketchRegistry {
     val existingDirs = (0 until n).filter(s =>
       Files.isDirectory(Paths.get(root, s"v_$v", s"shard=$s")))
     val oldTouchedDirs = existingDirs.filter(touched.contains)
-    val oldTouched =
-      if (oldTouchedDirs.isEmpty)
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      else spark.read.option("basePath", s"$root/v_$v")
-        .parquet(oldTouchedDirs.map(s => s"$root/v_$v/shard=$s"): _*)
+    val oldTouched = TableStore.readShards(spark, root, v, oldTouchedDirs)
     val antiCond = kc.zipWithIndex
       .map { case (c, i) => col(c) === col(s"__k$i") }.reduce(_ && _)
     val newTouched = oldTouched
@@ -1034,10 +1000,8 @@ object SketchRegistry {
     val oldReg = registry(spark, root, Some(v))
     val carried = oldReg.filter(!col("shard").isin(touched: _*))
     try TableStore.commitStaged(root, Some(v)) { staging =>
-      clusterForWrite(newTouched, col("__kh"), filesPerShard, 1 << m.shardsLog2)
-        .drop("__kh")
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(clusterForWrite(newTouched, col("__kh"), filesPerShard,
+        1 << m.shardsLog2).drop("__kh"), staging, table.schema)
       // single-evaluation upsert: the rebuilt touched-shard rows evaluate
       // ONCE (the write — anti-join ∪ batch); their registry aggregates
       // over the staged files read back BEFORE untouched shards link in
@@ -1054,8 +1018,8 @@ object SketchRegistry {
           m.bitsLog2, m.k, m.hllP, m.sketchCols, m.cmDepth, m.cmWidthLog2,
           m.sumCols, m.statsCols, m.labelCols, m.labelMax,
           c => labelMeasuresOf(oldReg.schema, c)))((d, c) => d.drop(s"cnt_$c"))
-      carried.unionByName(touchedRegistry).coalesce(1)
-        .write.mode("overwrite").parquet(staging.resolve("_sketches").toString)
+      TableStore.writeDir(carried.unionByName(touchedRegistry).coalesce(1),
+        staging.resolve("_sketches"))
       existingDirs.filterNot(touched.contains).foreach { s =>
         val src = Paths.get(root, s"v_$v", s"shard=$s")
         val dst = staging.resolve(s"shard=$s")
@@ -1092,8 +1056,8 @@ object SketchRegistry {
     require(m.cmDepth > 0,
       s"$root's registry predates per-shard CM rows — re-commit with the " +
         "current commitWithSketches before appending")
-    TableStore.requireSameDataSchema(rows,
-      TableStore.readVersion(spark, root, v), "append rows")
+    val table = TableStore.readVersion(spark, root, v)
+    TableStore.requireSameDataSchema(rows, table, "append rows")
     val n = 1 << m.shardsLog2
     val sharded = rows
       .withColumn("__kh", keyHashExprM(m))
@@ -1107,10 +1071,8 @@ object SketchRegistry {
     val autoCnt = m.statsCols.filterNot(m.sumCols.contains)
     val keptCnt = autoCnt.filter(c => old.columns.contains(s"cnt_$c"))
     TableStore.commitStaged(root, Some(v)) { staging =>
-      clusterForWrite(sharded, col("__kh"), filesPerShard, n)
-        .drop("__kh")
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(clusterForWrite(sharded, col("__kh"), filesPerShard, n)
+        .drop("__kh"), staging, table.schema)
       // single-evaluation append: the batch evaluates ONCE (the write);
       // its registry aggregates over the staged files read back BEFORE
       // the old version's files are linked in (readStaged), replacing the
@@ -1150,8 +1112,7 @@ object SketchRegistry {
         (acc, c) => acc.join(mergeShardLabels(both, c, m.labelMax),
           Seq("shard"))
       }
-      mergedRegistry.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_sketches").toString)
+      TableStore.writeDir(mergedRegistry.coalesce(1), staging.resolve("_sketches"))
       (0 until n).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$v", d)))
         .foreach(d => linkShardDir(Paths.get(root, s"v_$v", d),
@@ -1206,19 +1167,17 @@ object SketchRegistry {
     }
     val fat = (0 until n).filter(parquetCount(_) > maxFilesPerShard)
     if (fat.isEmpty) return v
-    val fatData = spark.read.option("basePath", s"$root/v_$v")
-      .parquet(fat.map(s => s"$root/v_$v/shard=$s"): _*)
+    val fatData = TableStore.readShards(spark, root, v, fat)
     TableStore.commitStaged(root, Some(v)) { staging =>
-      clusterForWrite(fatData, keyHashExprM(m), filesPerShard, n)
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(clusterForWrite(fatData, keyHashExprM(m), filesPerShard, n),
+        staging, fatData.schema)
       (0 until n).filterNot(fat.contains).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$v", d)))
         .foreach(d => linkShardDir(Paths.get(root, s"v_$v", d),
           staging.resolve(d)))
       // data unchanged ⇒ registry unchanged: carry the rows verbatim
-      registry(spark, root, Some(v)).coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_sketches").toString)
+      TableStore.writeDir(registry(spark, root, Some(v)).coalesce(1),
+        staging.resolve("_sketches"))
       Files.copy(Paths.get(root, s"v_$v", "_sketches_meta"),
         staging.resolve("_sketches_meta"))
       carryIfPresent(Paths.get(root, s"v_$v"), staging, "_ingest_progress")
@@ -1249,19 +1208,18 @@ object SketchRegistry {
     }
     val fat = (0 until n).filter(parquetCount(_) > maxFilesPerShard)
     if (fat.isEmpty) return v
-    val fatData = spark.read.option("basePath", s"$root/v_$v")
-      .parquet(fat.map(s => s"$root/v_$v/shard=$s"): _*)
+    val fatData = TableStore.readShards(spark, root, v, fat)
     TableStore.commitStaged(root, Some(v)) { staging =>
-      clusterForWrite(fatData, LayoutLong.longCol(col(m.sortCol)), filesPerShard, n)
-        .sortWithinPartitions(col("shard"), col(m.sortCol))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(
+        clusterForWrite(fatData, LayoutLong.longCol(col(m.sortCol)), filesPerShard, n)
+          .sortWithinPartitions(col("shard"), col(m.sortCol)),
+        staging, fatData.schema)
       (0 until n).filterNot(fat.contains).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$v", d)))
         .foreach(d => linkShardDir(Paths.get(root, s"v_$v", d),
           staging.resolve(d)))
-      zoneMap(spark, root, Some(v)).coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap").toString)
+      TableStore.writeDir(zoneMap(spark, root, Some(v)).coalesce(1),
+        staging.resolve("_zonemap"))
       Files.copy(Paths.get(root, s"v_$v", "_zonemap_meta"),
         staging.resolve("_zonemap_meta"))
       carryIfPresent(Paths.get(root, s"v_$v"), staging, "_ingest_progress")
@@ -1408,11 +1366,10 @@ object SketchRegistry {
       // cluster to bound files per shard, then sort WITHIN files by the
       // sort column so parquet row-group min/max stats are tight — engines
       // skip row groups inside a shard on top of the shard-level zone map
-      clusterForWrite(sharded, LayoutLong.longCol(col(sortCol)), filesPerShard,
-        1 << shardsLog2)
-        .sortWithinPartitions(col("shard"), col(sortCol))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(
+        clusterForWrite(sharded, LayoutLong.longCol(col(sortCol)), filesPerShard,
+          1 << shardsLog2).sortWithinPartitions(col("shard"), col(sortCol)),
+        staging, df.schema)
       // single-evaluation commit: the zone-map stats aggregate over the
       // just-written staged parquet (readStaged), not a second evaluation
       // of the source — with the bounds' two pre-write passes, the input
@@ -1452,8 +1409,7 @@ object SketchRegistry {
             distinctCols.exists(d => c == s"hll_$d")) ++
           labelCols.map(c => s"labels_$c") ++
           distinctCols.map(c => s"hll_$c")).map(col).toSeq: _*)
-      registry.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap").toString)
+      TableStore.writeDir(registry.coalesce(1), staging.resolve("_zonemap"))
       // v3 meta: the v2 lines, then labelCols/labelMax/distinctCols/hllP
       // (always present, possibly empty), then the layout-unit token —
       // see [[hashMetaText]] for the contract
@@ -1622,8 +1578,8 @@ object SketchRegistry {
     val ver = expectedVersion.orElse(TableStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
     val m = rangeMeta(root, Some(ver))
-    TableStore.requireSameDataSchema(rows,
-      TableStore.readVersion(spark, root, ver), "append rows")
+    val table = TableStore.readVersion(spark, root, ver)
+    TableStore.requireSameDataSchema(rows, table, "append rows")
     val v = LayoutLong.longCol(col(m.sortCol))
     val sharded = rows.withColumn("shard", rangeShardCol(m.sortCol, m.bounds))
     val oldZm = zoneMap(spark, root, Some(ver))
@@ -1634,10 +1590,10 @@ object SketchRegistry {
     val keptCnt = autoCnt.filter(c => oldZm.columns.contains(s"cnt_$c"))
     val n = 1 << m.shardsLog2
     TableStore.commitStaged(root, Some(ver)) { staging =>
-      clusterForWrite(sharded, LayoutLong.longCol(col(m.sortCol)), filesPerShard, n)
-        .sortWithinPartitions(col("shard"), col(m.sortCol))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(
+        clusterForWrite(sharded, LayoutLong.longCol(col(m.sortCol)), filesPerShard, n)
+          .sortWithinPartitions(col("shard"), col(m.sortCol)),
+        staging, table.schema)
       // single-evaluation append: the batch evaluates ONCE (the write);
       // its stats aggregate over the staged files read back BEFORE the old
       // version's files link in (readStaged) — replaces the r18 persist.
@@ -1701,8 +1657,7 @@ object SketchRegistry {
             m.distinctCols.exists(d => c == s"hll_$d")) ++
           m.labelCols.map(c => s"labels_$c") ++
           m.distinctCols.map(c => s"hll_$c")).map(col).toSeq: _*)
-      mergedZoneMap.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap").toString)
+      TableStore.writeDir(mergedZoneMap.coalesce(1), staging.resolve("_zonemap"))
       (0 until n).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$ver", d)))
         .foreach(d => linkShardDir(Paths.get(root, s"v_$ver", d),
@@ -1776,7 +1731,7 @@ object SketchRegistry {
     val v = version.orElse(TableStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
     rangeMeta(root, Some(v)) // loud guard: range layout required
-    spark.read.parquet(s"$root/v_$v/_zonemap")
+    TableStore.readDir(spark, s"$root/v_$v/_zonemap")
   }
 
   /** The shard directories a `[lo, hi]` range read must open: those whose
@@ -1806,14 +1761,8 @@ object SketchRegistry {
     val m = rangeMeta(root, version)
     val v = TableStore.resolveVersion(root, version)
     val between = LayoutLong.longCol(col(m.sortCol)).between(lo, hi)
-    prunedRangeShards(spark, root, lo, hi, Some(v)) match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case shards =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(between)
-    }
+    TableStore.readShards(spark, root, v, prunedRangeShards(spark, root, lo, hi, Some(v)))
+      .filter(between)
   }
 
   /** Range read on a SECONDARY stats column `c`: only shards whose exact
@@ -1839,14 +1788,8 @@ object SketchRegistry {
       .collect { case r if r.isNullAt(1) ||
           (r.getLong(2) >= lo && r.getLong(1) <= hi) => r.getInt(0) }
       .toSeq.sorted
-    shards match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(LayoutLong.longCol(col(c)).between(lo, hi))
-    }
+    TableStore.readShards(spark, root, v, shards)
+      .filter(LayoutLong.longCol(col(c)).between(lo, hi))
   }
 
   /** The shard subsets a sort-column equi-join of two RANGE-sharded
@@ -1904,13 +1847,8 @@ object SketchRegistry {
     val va = TableStore.resolveVersion(rootA, versionA)
     val vb = TableStore.resolveVersion(rootB, versionB)
     val (sa, sb) = rangeColocatedShards(spark, rootA, rootB, Some(va), Some(vb))
-    def side(root: String, v: Long, shards: Seq[Int]): DataFrame = shards match {
-      case Nil => TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss => spark.read.option("basePath", s"$root/v_$v")
-        .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-    }
-    val a = side(rootA, va, sa)
-    val bRaw = side(rootB, vb, sb).drop("shard")
+    val a = TableStore.readShards(spark, rootA, va, sa)
+    val bRaw = TableStore.readShards(spark, rootB, vb, sb).drop("shard")
     val collide = bRaw.columns.filter(c => c != ma.sortCol &&
       a.columns.contains(c))
     val b = collide.foldLeft(bRaw)((d, c) => d.withColumnRenamed(c, s"${c}_b"))
@@ -1969,14 +1907,8 @@ object SketchRegistry {
     // pure driver arithmetic over the memoized rows — zero Spark jobs
     val shards = MetaCache.admittedShards(zoneMap(spark, root, Some(v)),
       root, v, s"bloom_$c", values, m.bloomBitsLog2, m.bloomK)
-    shards match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(LayoutLong.longCol(col(c)).isin(values: _*))
-    }
+    TableStore.readShards(spark, root, v, shards)
+      .filter(LayoutLong.longCol(col(c)).isin(values: _*))
   }
 
   /** Point-FREQUENCY estimates for probe keys off the registry ALONE —
@@ -2103,17 +2035,9 @@ object SketchRegistry {
                          version: Option[Long] = None): DataFrame = {
     val m = meta(root, version)
     val v = TableStore.resolveVersion(root, version)
-    prunedShards(spark, root, key, version) match {
-      case Nil =>
-        (version match {
-          case Some(x) => TableStore.readVersion(spark, root, x)
-          case None    => TableStore.read(spark, root)
-        }).filter(lit(false)) // schema only; optimizes to an empty relation
-      case shards =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(col(m.keyCol) === key)
-    }
+    // a Bloom miss reads no shard: schema only, an empty relation
+    TableStore.readShards(spark, root, v, prunedShards(spark, root, key, version))
+      .filter(col(m.keyCol) === key)
   }
 
   /** [[lookupWithSketches]] for a STRING-keyed table (URL- or doc-id-keyed
@@ -2128,17 +2052,9 @@ object SketchRegistry {
                                version: Option[Long] = None): DataFrame = {
     val m = meta(root, version)
     val v = TableStore.resolveVersion(root, version)
-    prunedShardsString(spark, root, key, version) match {
-      case Nil =>
-        (version match {
-          case Some(x) => TableStore.readVersion(spark, root, x)
-          case None    => TableStore.read(spark, root)
-        }).filter(lit(false))
-      case shards =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(col(m.keyCol) === key)
-    }
+    // a Bloom miss reads no shard: schema only, an empty relation
+    TableStore.readShards(spark, root, v, prunedShardsString(spark, root, key, version))
+      .filter(col(m.keyCol) === key)
   }
 
   /** [[lookupWithSketches]] for a COMPOSITE-keyed table (the session
@@ -2153,17 +2069,8 @@ object SketchRegistry {
                              version: Option[Long] = None): DataFrame = {
     val m = meta(root, version)
     val v = TableStore.resolveVersion(root, version)
-    prunedShardsKeys(spark, root, key, version) match {
-      case Nil =>
-        (version match {
-          case Some(x) => TableStore.readVersion(spark, root, x)
-          case None    => TableStore.read(spark, root)
-        }).filter(lit(false))
-      case shards =>
-        val data = spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-        data.filter(m.keyCols.zip(key)
-          .map { case (c, kv) => col(c) === lit(kv) }.reduce(_ && _))
-    }
+    TableStore.readShards(spark, root, v, prunedShardsKeys(spark, root, key, version))
+      .filter(m.keyCols.zip(key)
+        .map { case (c, kv) => col(c) === lit(kv) }.reduce(_ && _))
   }
 }

@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -14,7 +16,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * `_CURRENT`, so they see either the old version or the new one, never a
   * half-written directory.
   *
-  * Layout: `<root>/v_<n>/` (parquet), `<root>/_CURRENT` (contains `v_<n>`).
+  * Layout: `<root>/v_<n>/` (parquet, plus `v_<n>/_schema`, the version's
+  * pinned schema), `<root>/_CURRENT` (contains `v_<n>`).
   * The pointer swap is a same-directory ATOMIC_MOVE — atomic on POSIX
   * filesystems and on HDFS-style object stores with a rename primitive.
   *
@@ -146,7 +149,95 @@ object TableStore {
   def read(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
-    spark.read.parquet(s"$root/v_$v")
+    readDir(spark, s"$root/v_$v")
+  }
+
+  /** The pinned-schema file every commit writes into its version directory
+    * and into each registry directory beside the data: the Spark JSON of
+    * the schema parquet inference returns for that directory (recursively
+    * nullable, the `shard` layout column last). Versions are immutable, so
+    * the schema is fixed at commit and reads never need to infer it.
+    */
+  private val SchemaFile = "_schema"
+
+  /** The pinned schema of a version or registry directory, if its commit
+    * wrote one (directories committed before schemas were pinned have none).
+    */
+  private[core] def pinnedSchema(dir: String): Option[StructType] = {
+    val p = Paths.get(dir, SchemaFile)
+    if (!Files.exists(p)) None
+    else Some(DataType.fromJson(new String(Files.readAllBytes(p),
+      StandardCharsets.UTF_8)).asInstanceOf[StructType])
+  }
+
+  /** Read a version or registry directory — or the `paths` under it (shard
+    * directories or files, with `dir` as the partition base) — with its
+    * pinned schema. Every read of a version directory goes through here:
+    * a pinned read plans with zero Spark jobs, where parquet schema
+    * inference runs one job per read. Directories without `_schema` fall
+    * back to inference.
+    */
+  def readDir(spark: SparkSession, dir: String, paths: Seq[String] = Nil): DataFrame = {
+    val reader = pinnedSchema(dir) match {
+      case Some(schema) => spark.read.schema(schema)
+      case None         => spark.read
+    }
+    if (paths.isEmpty) reader.parquet(dir)
+    else reader.option("basePath", dir).parquet(paths: _*)
+  }
+
+  /** The `shards` directories of `root`'s version `v`; no shards reads no
+    * file (the table's schema, no rows).
+    */
+  private[core] def readShards(spark: SparkSession, root: String, v: Long,
+                               shards: Seq[Int]): DataFrame =
+    if (shards.isEmpty) readDir(spark, s"$root/v_$v").filter(lit(false))
+    else readDir(spark, s"$root/v_$v", shards.map(s => s"$root/v_$v/shard=$s"))
+
+  /** `s` with every field, element and value nullable — the form parquet
+    * reads return whatever the writer's nullability was.
+    */
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(dt: DataType): DataType = dt match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullableType(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullableType(m.keyType), nullableType(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** The schema inference returns for a directory written from `schema`
+    * partitioned by `shard`: the data columns nullable, then `shard` as the
+    * int partition column.
+    */
+  private def shardedSchema(schema: StructType): StructType =
+    StructType(nullable(StructType(schema.filterNot(_.name == "shard"))).fields :+
+      StructField("shard", IntegerType))
+
+  private def pinSchema(dir: Path, schema: StructType): Unit = {
+    Files.createDirectories(dir)
+    Files.write(dir.resolve(SchemaFile), schema.json.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** Write `df` as the parquet directory `dir` (a plain version, or a
+    * registry inside a staged version) and pin its schema.
+    */
+  private[core] def writeDir(df: DataFrame, dir: Path): Unit = {
+    df.write.mode("overwrite").parquet(dir.toString)
+    pinSchema(dir, nullable(df.schema))
+  }
+
+  /** Write `df` into `dir` partitioned by its `shard` column and pin the
+    * table's schema: `schema`'s, which maintenance verbs carry forward from
+    * the version they rewrite.
+    */
+  private[core] def writeShards(df: DataFrame, dir: Path,
+                                schema: StructType): Unit = {
+    df.write.mode("overwrite").partitionBy("shard").parquet(dir.toString)
+    pinSchema(dir, shardedSchema(schema))
   }
 
   /** Time-travel read of a specific COMMITTED version (must be within
@@ -160,7 +251,7 @@ object TableStore {
       s"v_$version was never committed under $root (pointer is at v_$cur)")
     require(Files.exists(Paths.get(root, s"v_$version")),
       s"v_$version under $root was vacuumed; only ${versions(root).mkString(", ")} remain")
-    spark.read.parquet(s"$root/v_$version")
+    readDir(spark, s"$root/v_$version")
   }
 
   /** Committed versions still readable on disk, oldest first. */
@@ -206,8 +297,7 @@ object TableStore {
     */
   def commit(df: DataFrame, root: String, expectedVersion: Option[Long] = None,
              lockStaleMs: Long = 60 * 60 * 1000L, lockWaitMs: Long = 60 * 1000L): Long =
-    commitStaged(root, expectedVersion, lockStaleMs, lockWaitMs)(staging =>
-      df.write.mode("overwrite").parquet(staging.toString))
+    commitStaged(root, expectedVersion, lockStaleMs, lockWaitMs)(writeDir(df, _))
 
   /** Require `rows` to carry exactly the table's data columns — same NAMES
     * and same DATA TYPES. A name-only check would let a batch with matching
@@ -358,7 +448,7 @@ object TableStore {
     */
   def mergeFrom(spark: SparkSession, root: String, base: Long)(
       transform: DataFrame => DataFrame): Long = {
-    val next = transform(spark.read.parquet(s"$root/v_$base"))
+    val next = transform(readDir(spark, s"$root/v_$base"))
     commit(next, root, expectedVersion = Some(base))
   }
 
@@ -382,8 +472,8 @@ object TableStore {
     */
   def changeFeed(spark: SparkSession, root: String, idCols: Seq[String],
                  baseVersion: Long, toVersion: Long): DataFrame =
-    changeFeedFrames(spark.read.parquet(s"$root/v_$baseVersion"),
-      spark.read.parquet(s"$root/v_$toVersion"),
+    changeFeedFrames(readDir(spark, s"$root/v_$baseVersion"),
+      readDir(spark, s"$root/v_$toVersion"),
       idCols, baseVersion, toVersion)
 
   /** [[changeFeed]] over caller-supplied version frames — the shared diff

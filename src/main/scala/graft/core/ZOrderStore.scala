@@ -237,10 +237,8 @@ object ZOrderStore {
       // one keyed shuffle clusters rows by shard (one file per shard dir),
       // sorted within the file by (colA, colB) so parquet row-group stats
       // stay tight inside each shard
-      sharded.repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col(colA), col(colB))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(sharded.repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col(colA), col(colB)), staging, df.schema)
       // single-evaluation commit: the 2-D zone map aggregates over the
       // just-written staged parquet (SketchRegistry.readStaged), not a
       // THIRD evaluation of the source — with rankBounds' two pre-write
@@ -248,8 +246,7 @@ object ZOrderStore {
       val written = SketchRegistry.readStaged(df.sparkSession, staging, sharded)
       val zonemap = zStats(written, colA, colB, sketchCols, bloomBitsLog2,
         bloomK, sumCols, labelCols, labelMax, _ => labelStatsCols)
-      zonemap.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap2d").toString)
+      TableStore.writeDir(zonemap.coalesce(1), staging.resolve("_zonemap2d"))
       writeZMeta(staging, colA, colB, bits, subLog2, boundsA, boundsB,
         sketchCols, bloomBitsLog2, bloomK, sumCols, labelCols, labelMax)
     }
@@ -272,16 +269,14 @@ object ZOrderStore {
     val ver = expectedVersion.orElse(TableStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
     val m = zMeta(root, Some(ver))
-    TableStore.requireSameDataSchema(rows,
-      TableStore.readVersion(spark, root, ver), "append rows")
+    val table = TableStore.readVersion(spark, root, ver)
+    TableStore.requireSameDataSchema(rows, table, "append rows")
     val sharded = rows.withColumn("shard", shardColOf(m))
     val oldZm2 = zoneMap2d(spark, root, Some(ver))
     val n = 1 << (2 * m.bitsPerCol)
     TableStore.commitStaged(root, Some(ver)) { staging =>
-      sharded.repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(sharded.repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB)), staging, table.schema)
       // single-evaluation append: the batch evaluates ONCE (the write);
       // its stats aggregate over the staged files read back BEFORE the
       // old version's files link in (SketchRegistry.readStaged) —
@@ -311,8 +306,7 @@ object ZOrderStore {
         acc.join(SketchRegistry.mergeShardLabels(both, c, m.labelMax),
           Seq("shard"))
       }
-      mergedZoneMap.coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap2d").toString)
+      TableStore.writeDir(mergedZoneMap.coalesce(1), staging.resolve("_zonemap2d"))
       (0 until n).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$ver", d)))
         .foreach(d => TableStore.linkDirInto(Paths.get(root, s"v_$ver", d),
@@ -356,8 +350,8 @@ object ZOrderStore {
       s"keyed changes need a per-cell Bloom on '$keyCol' to locate old " +
         s"rows — commit with sketchCols including it (committed: " +
         s"${m.sketchCols.mkString(",")})")
-    TableStore.requireSameDataSchema(upserts,
-      TableStore.readVersion(spark, root, ver), "upserts")
+    val table = TableStore.readVersion(spark, root, ver)
+    TableStore.requireSameDataSchema(upserts, table, "upserts")
     // persisted for the verb's own lifetime (unpersisted in the finally
     // below — every consumer materializes inside this call): the key set
     // is re-evaluated by the Bloom probe, the anti-join broadcast under
@@ -384,11 +378,7 @@ object ZOrderStore {
     val existingDirs = (0 until n).filter(s =>
       Files.isDirectory(Paths.get(root, s"v_$ver", s"shard=$s")))
     val oldTouchedDirs = existingDirs.filter(touched.contains)
-    val oldTouched =
-      if (oldTouchedDirs.isEmpty)
-        TableStore.readVersion(spark, root, ver).filter(lit(false))
-      else spark.read.option("basePath", s"$root/v_$ver")
-        .parquet(oldTouchedDirs.map(s => s"$root/v_$ver/shard=$s"): _*)
+    val oldTouched = TableStore.readShards(spark, root, ver, oldTouchedDirs)
     val newTouched = oldTouched
       .join(broadcast(changedKeys), LayoutLong.longCol(col(keyCol)) === col("__k"),
         "left_anti")
@@ -397,10 +387,8 @@ object ZOrderStore {
     val carried = oldZmU
       .filter(!col("shard").isin(touched: _*))
     try TableStore.commitStaged(root, Some(ver)) { staging =>
-      newTouched.repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(newTouched.repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB)), staging, table.schema)
       // single-evaluation upsert: the rebuilt touched-cell rows evaluate
       // ONCE (the write — anti-join ∪ batch); their stats aggregate over
       // the staged files read back BEFORE untouched cells link in
@@ -410,9 +398,8 @@ object ZOrderStore {
       val touchedStats = zStats(written, m.colA, m.colB, m.sketchCols,
         m.bloomBitsLog2, m.bloomK, m.sumCols, m.labelCols, m.labelMax,
         c => SketchRegistry.labelMeasuresOf(oldZmU.schema, c))
-      carried.unionByName(touchedStats).coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap2d").toString)
+      TableStore.writeDir(carried.unionByName(touchedStats).coalesce(1),
+        staging.resolve("_zonemap2d"))
       existingDirs.filterNot(touched.contains).foreach { s =>
         TableStore.linkDirInto(Paths.get(root, s"v_$ver", s"shard=$s"),
           staging.resolve(s"shard=$s"))
@@ -448,19 +435,16 @@ object ZOrderStore {
     }
     val fat = (0 until n).filter(parquetCount(_) > maxFilesPerShard)
     if (fat.isEmpty) return v
-    val fatData = spark.read.option("basePath", s"$root/v_$v")
-      .parquet(fat.map(s => s"$root/v_$v/shard=$s"): _*)
+    val fatData = TableStore.readShards(spark, root, v, fat)
     TableStore.commitStaged(root, Some(v)) { staging =>
-      fatData.repartition(col("shard"))
-        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(staging.toString)
+      TableStore.writeShards(fatData.repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col(m.colA), col(m.colB)), staging, fatData.schema)
       (0 until n).filterNot(fat.contains).map(s => s"shard=$s")
         .filter(d => Files.isDirectory(Paths.get(root, s"v_$v", d)))
         .foreach(d => TableStore.linkDirInto(Paths.get(root, s"v_$v", d),
           staging.resolve(d)))
-      zoneMap2d(spark, root, Some(v)).coalesce(1).write.mode("overwrite")
-        .parquet(staging.resolve("_zonemap2d").toString)
+      TableStore.writeDir(zoneMap2d(spark, root, Some(v)).coalesce(1),
+        staging.resolve("_zonemap2d"))
       Files.copy(Paths.get(root, s"v_$v", "_zonemap2d_meta"),
         staging.resolve("_zonemap2d_meta"))
       SketchRegistry.carryIfPresent(Paths.get(root, s"v_$v"), staging,
@@ -520,7 +504,7 @@ object ZOrderStore {
     val v = version.orElse(TableStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))
     zMeta(root, Some(v)) // loud guard: z-order layout required
-    spark.read.parquet(s"$root/v_$v/_zonemap2d")
+    TableStore.readDir(spark, s"$root/v_$v/_zonemap2d")
   }
 
   /** The shard directories a box read must open: those whose exact
@@ -555,14 +539,8 @@ object ZOrderStore {
     val v = TableStore.resolveVersion(root, version)
     val inBox = LayoutLong.longCol(col(m.colA)).between(aLo, aHi) &&
       LayoutLong.longCol(col(m.colB)).between(bLo, bHi)
-    prunedBoxShards(spark, root, aLo, aHi, bLo, bHi, Some(v)) match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case shards =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(shards.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(inBox)
-    }
+    TableStore.readShards(spark, root, v,
+      prunedBoxShards(spark, root, aLo, aHi, bLo, bHi, Some(v))).filter(inBox)
   }
 
   /** Equality `IN`-lookup on a Bloom-indexed column of a Z-order table:
@@ -588,14 +566,8 @@ object ZOrderStore {
     // pure driver arithmetic over the memoized rows — zero Spark jobs
     val shards = MetaCache.admittedShards(zoneMap2d(spark, root, Some(v)),
       root, v, s"bloom_$c", values, m.bloomBitsLog2, m.bloomK)
-    shards match {
-      case Nil =>
-        TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss =>
-        spark.read.option("basePath", s"$root/v_$v")
-          .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-          .filter(LayoutLong.longCol(col(c)).isin(values: _*))
-    }
+    TableStore.readShards(spark, root, v, shards)
+      .filter(LayoutLong.longCol(col(c)).isin(values: _*))
   }
 
   /** The shard subsets a (colA, colB)-equality join of two Z-ORDER tables
@@ -647,14 +619,9 @@ object ZOrderStore {
     val va = TableStore.resolveVersion(rootA, versionA)
     val vb = TableStore.resolveVersion(rootB, versionB)
     val (sa, sb) = zColocatedShards(spark, rootA, rootB, Some(va), Some(vb))
-    def side(root: String, v: Long, shards: Seq[Int]): DataFrame = shards match {
-      case Nil => TableStore.readVersion(spark, root, v).filter(lit(false))
-      case ss => spark.read.option("basePath", s"$root/v_$v")
-        .parquet(ss.map(s => s"$root/v_$v/shard=$s"): _*)
-    }
     val keys = Seq(ma.colA, ma.colB)
-    val a = side(rootA, va, sa)
-    val bRaw = side(rootB, vb, sb).drop("shard")
+    val a = TableStore.readShards(spark, rootA, va, sa)
+    val bRaw = TableStore.readShards(spark, rootB, vb, sb).drop("shard")
     val collide = bRaw.columns.filter(c => !keys.contains(c) &&
       a.columns.contains(c))
     val b = collide.foldLeft(bRaw)((d, c) => d.withColumnRenamed(c, s"${c}_b"))

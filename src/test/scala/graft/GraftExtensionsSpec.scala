@@ -16,11 +16,10 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     previousDefault = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
+    // the engine's builder: if this suite creates the shared SparkContext,
+    // its static confs (the generated-code cache size) are the engine's
+    val s = graft.core.GraftSession.builder(2)
       .appName("graft-extensions-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

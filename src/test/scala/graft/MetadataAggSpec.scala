@@ -43,6 +43,15 @@ class MetadataAggSpec extends AnyFunSuite with SparkTest
     isLocal && !df.queryExecution.executedPlan.toString.contains("FileScan")
   }
 
+  test("shard-set digest: deterministic, 128-bit, distinct across shard sets") {
+    val sets = (0 until 1024).map(mask => (0 until 10).filter(b => (mask >> b & 1) == 1)) ++
+      Seq(0 until 4096, 1 until 4096, Seq(4095), Seq(0, 4095))
+    val digests = sets.map(MetadataAggCollapse.shardSetDigest)
+    assert(digests == sets.map(MetadataAggCollapse.shardSetDigest))
+    assert(digests.forall(_.matches("[0-9a-f]{32}")))
+    assert(digests.distinct.size == sets.size)
+  }
+
   test("range layout: count/min/max on sort + stats columns collapse to exact values, zero FileScan") {
     val root = java.nio.file.Files.createTempDirectory("magg_range").toString
     // event_id correlates with ts; val3 carries an all-null stats column
